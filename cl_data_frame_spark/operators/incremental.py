@@ -93,12 +93,11 @@ def minhash_index_update(spark: SparkSession, index_dir: str, batch,
     for exactly-once streaming ingest (see
     ``sketch.sketch_state_stream_sink`` for the replay protocol).
     """
-    from cl_data_frame_spark.sources.snapshots import (snapshot_read,
-                                                       snapshot_write)
+    from cl_data_frame_spark.sources.snapshots import (
+        _retry_commit, snapshot_read, snapshot_txn_version,
+        snapshot_write)
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
-    from cl_data_frame_spark.sources.snapshots import (
-        snapshot_txn_version)
     sdf = _plain(batch)
     sigs = _signatures(sdf, id_col, text_col, num_hashes,
                        shingle_k=5).localCheckpoint(eager=True)
@@ -186,10 +185,8 @@ def minhash_index_update(spark: SparkSession, index_dir: str, batch,
     # publish re-enters with ITS signatures in the index, so the loser
     # RE-DEDUPS against the new state before retrying (a blind retry
     # would admit both batches' mutual near-dups as novel)
-    last: FileExistsError | None = None
-    for _ in range(6):
-        index = read_index()
-        flags = compute_flags(index)
+    def attempt():
+        flags = compute_flags(read_index())
         if txn is not None:
             done = snapshot_txn_version(index_dir, txn[0])
             if done is not None and int(txn[1]) <= done:
@@ -197,15 +194,9 @@ def minhash_index_update(spark: SparkSession, index_dir: str, batch,
         novel_ids = flags.filter(~F.col("is_duplicate")) \
             .select(id_col)
         novel_sigs = sigs.join(novel_ids, on=id_col)
-        try:
-            snapshot_write(novel_sigs, index_dir, mode="append",
-                           txn=txn)
-            return SparkFrame(flags)
-        except FileExistsError as exc:
-            last = exc
-    raise FileExistsError(
-        f"index update lost the publish race 6 times in "
-        f"{index_dir}: {last}")
+        snapshot_write(novel_sigs, index_dir, mode="append", txn=txn)
+        return SparkFrame(flags)
+    return _retry_commit(attempt, "index update", index_dir)
 
 
 def minhash_index_stream_sink(index_dir: str, flags_dir: str,

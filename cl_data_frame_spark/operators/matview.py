@@ -808,8 +808,7 @@ def _delta_agg(changes: DataFrame, keys: list[str],
 
 
 def matview_refresh(spark: SparkSession, view_dir: str,
-                    to_version: int | None = None,
-                    max_retries: int = 5) -> dict:
+                    to_version: int | None = None) -> dict:
     """Advance the view to the source's *to_version* (default: its
     latest) by consuming the change feed since the last refresh.
     Cost O(changed rows + touched groups); ONE snapshot_merge commit
@@ -821,16 +820,11 @@ def matview_refresh(spark: SparkSession, view_dir: str,
     double-applying its delta and retries from the new watermark.
     Returns a summary dict."""
     from cl_data_frame_spark.sources.snapshots import (
-        SnapshotTxnConflict)
-    last: Exception | None = None
-    for _ in range(max_retries + 1):
-        try:
-            return _refresh_once(spark, view_dir, to_version)
-        except SnapshotTxnConflict as exc:
-            last = exc          # recompute from the moved watermark
-    raise SnapshotTxnConflict(
-        f"matview refresh lost the watermark race {max_retries + 1} "
-        f"times in {view_dir} (pathological contention): {last}")
+        SnapshotTxnConflict, _retry_commit)
+    # a lost watermark CAS recomputes from the moved watermark
+    return _retry_commit(
+        lambda: _refresh_once(spark, view_dir, to_version),
+        "matview refresh", view_dir, retry_on=SnapshotTxnConflict)
 
 
 def matview_refresh_chunked(spark: SparkSession, view_dir: str,

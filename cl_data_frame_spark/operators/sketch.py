@@ -221,8 +221,7 @@ def frequent_items(frame, col: str, k: int = 10,
 def sketch_state_update(spark, table_dir: str, batch, col: str,
                         group_cols: Sequence[str] = (),
                         lg_k: int = 12,
-                        txn: tuple[str, int] | None = None,
-                        max_retries: int = 5) -> int:
+                        txn: tuple[str, int] | None = None) -> int:
     """Incrementally maintain a per-group distinct-count STATE table:
     merge the BATCH's HLL sketches into the snapshot-backed state and
     publish the merged state as a new version — one scan over the
@@ -241,9 +240,9 @@ def sketch_state_update(spark, table_dir: str, batch, col: str,
     new = hll_sketch(batch, col, list(group_cols), lg_k=lg_k) \
         .spark_df.select(*group_cols, "sketch")
     from cl_data_frame_spark.sources.snapshots import (
-        snapshot_read, snapshot_write)
-    last: FileExistsError | None = None
-    for _ in range(max_retries + 1):
+        _retry_commit, snapshot_read, snapshot_write)
+
+    def attempt():                     # racer landed: re-read, re-merge
         try:
             cur = snapshot_read(spark, table_dir).spark_df \
                 .select(*group_cols, "sketch")
@@ -258,14 +257,9 @@ def sketch_state_update(spark, table_dir: str, batch, col: str,
             *group_cols,
             F.hll_sketch_estimate("sketch").alias("estimate"),
             "sketch")
-        try:
-            return snapshot_write(state, table_dir, mode="overwrite",
-                                  num_files=1, txn=txn)
-        except FileExistsError as exc:
-            last = exc                 # racer landed: re-read, re-merge
-    raise FileExistsError(
-        f"sketch state update lost the publish race "
-        f"{max_retries + 1} times in {table_dir}: {last}")
+        return snapshot_write(state, table_dir, mode="overwrite",
+                              num_files=1, txn=txn)
+    return _retry_commit(attempt, "sketch state update", table_dir)
 
 
 def sketch_state_stream_sink(table_dir: str, col: str,
@@ -298,8 +292,7 @@ def kll_state_update(spark, table_dir: str, batch, col: str,
                      group_cols: Sequence[str] = (),
                      k: int = 200,
                      quantiles: Sequence[float] = (0.5, 0.9, 0.99),
-                     txn: tuple[str, int] | None = None,
-                     max_retries: int = 5) -> int:
+                     txn: tuple[str, int] | None = None) -> int:
     """The QUANTILE twin of :func:`sketch_state_update`: maintain
     per-group KLL sketches in a snapshot-backed state table, merged
     per ingest batch — "p50/p90/p99 doc length per source, updated
@@ -315,7 +308,7 @@ def kll_state_update(spark, table_dir: str, batch, col: str,
     the batch plus the k-sized state. Publish races re-read and
     re-merge, mirroring the HLL updater."""
     from cl_data_frame_spark.sources.snapshots import (
-        snapshot_read, snapshot_write)
+        _retry_commit, snapshot_read, snapshot_write)
     gc = list(group_cols)
     sdf = _plain(batch)
     key = gc if gc else ["__all__"]
@@ -326,8 +319,8 @@ def kll_state_update(spark, table_dir: str, batch, col: str,
     qcols = [F.kll_sketch_get_quantile_double(
         "sketch", F.lit(float(q))).alias(f"q_{int(q * 100)}")
         for q in quantiles]
-    last: FileExistsError | None = None
-    for _ in range(max_retries + 1):
+
+    def attempt():
         try:
             cur = snapshot_read(spark, table_dir).spark_df
             if not gc:
@@ -349,11 +342,6 @@ def kll_state_update(spark, table_dir: str, batch, col: str,
             *qcols, "sketch")
         if not gc:
             state = state.drop("__all__")
-        try:
-            return snapshot_write(state, table_dir, mode="overwrite",
-                                  num_files=1, txn=txn)
-        except FileExistsError as exc:
-            last = exc
-    raise FileExistsError(
-        f"kll state update lost the publish race "
-        f"{max_retries + 1} times in {table_dir}: {last}")
+        return snapshot_write(state, table_dir, mode="overwrite",
+                              num_files=1, txn=txn)
+    return _retry_commit(attempt, "kll state update", table_dir)

@@ -17,12 +17,13 @@ from pyspark.sql import SparkSession
 
 def get_spark(app_name: str = "cl_data_frame_spark", master: str | None = None) -> SparkSession:
     """Build (or fetch) the session with the engine's standard config."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = len(os.sched_getaffinity(0))  # the CPUs this process may use
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(cores))
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(min(int(cpus) if cpus.isdigit() else 32, 64)))
+        .config("spark.sql.shuffle.partitions", str(min(int(cpus) if cpus.isdigit() else cores, 64)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

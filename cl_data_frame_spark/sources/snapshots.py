@@ -13,8 +13,8 @@ Layout::
                                    "schema", "parent", "operation"}
       _manifests/v00000002.json   DELTA commit: {"add", "remove",
                                    "stats_add", "op_rename", ...}
-      _manifests/v00000020.ckpt   full-state checkpoint every
-                                   _CHECKPOINT_EVERY commits
+      _manifests/v00000020.ckpt.parquet   full-state checkpoint
+                                   every _CHECKPOINT_EVERY commits
       _manifests/sidecars/sc-<token>.json   bloom-filter bytes
       data/v00000001-<token>/part-*.parquet
 
@@ -82,6 +82,11 @@ _CKPT_HINT = "_last_ckpt"
 #: are O(delta) JSON; reads are O(1) checkpoint + O(commits-since).
 _CHECKPOINT_EVERY = 20
 
+#: attempts every optimistic commit makes before giving up — the one
+#: retry policy shared by all snapshot-table writers (ingest, DML,
+#: streaming sinks, views, sketch state); see ``_retry_commit``
+_COMMIT_ATTEMPTS = 6
+
 
 def _plain(frame) -> DataFrame:
     return frame.spark_df if isinstance(frame, SparkFrame) else frame
@@ -89,10 +94,6 @@ def _plain(frame) -> DataFrame:
 
 def _manifest_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, _MANIFEST_DIR, f"v{version:08d}.json")
-
-
-def _ckpt_path(table_dir: str, version: int) -> str:
-    return os.path.join(table_dir, _MANIFEST_DIR, f"v{version:08d}.ckpt")
 
 
 def _ckpt_pq_path(table_dir: str, version: int) -> str:
@@ -147,10 +148,11 @@ def _versions(table_dir: str) -> list[int]:
 # added/removed files, stats/bloom for the added files, metadata-op
 # records — so commit JSON is O(changed files), not O(#files). Every
 # _CHECKPOINT_EVERY commits (and before vacuum drops history) a full
-# reconstructed state lands in a vNNNNNNNN.ckpt file; a read resolves
-# O(1) checkpoint + O(commits-since-checkpoint) deltas. Reconstructed
-# states are LRU-cached in-process (manifests are immutable once
-# published, so the cache can never serve a stale answer). The
+# reconstructed state lands in a vNNNNNNNN.ckpt.parquet file; a read
+# resolves O(1) checkpoint + O(commits-since-checkpoint) deltas.
+# Reconstructed states are LRU-cached in-process (manifests are
+# immutable once published, so the cache can never serve a stale
+# answer). The
 # _read_manifest contract is unchanged: callers always receive the
 # FULL logical state dict, whatever the on-disk encoding.
 # ---------------------------------------------------------------------------
@@ -534,13 +536,7 @@ def _read_manifest(table_dir: str, version: int) -> dict:
         except (OSError, ValueError, KeyError):
             pass   # absent / unreadable ckpt: ArrowInvalid is a
             # ValueError, Arrow IO errors are OSError — fall through
-            # to the JSON ckpt, then the delta chain (always correct)
-        try:
-            with open(_ckpt_path(table_dir, v)) as f:
-                state = json.load(f)
-            break
-        except (FileNotFoundError, json.JSONDecodeError):
-            pass
+            # to the delta chain (always correct)
         try:
             with open(_manifest_path(table_dir, v)) as f:
                 d = json.load(f)
@@ -660,6 +656,26 @@ def _publish(table_dir: str, manifest: dict) -> None:
         # duplicate data. Readers fall back to listing / delta replay.
 
 
+def _retry_commit(attempt, what: str, table_dir: str,
+                  retry_on=FileExistsError):
+    """The optimistic-concurrency commit loop: call *attempt* until it
+    returns, re-running it whenever it raises *retry_on* (a lost
+    publish race, or a lost watermark CAS for ``SnapshotTxnConflict``).
+    Each attempt re-reads whatever state it commits against, so a retry
+    lands on the winner's version. After ``_COMMIT_ATTEMPTS`` lost
+    races (pathological contention) raises *retry_on* naming *what*
+    and *table_dir*."""
+    last = None
+    for _ in range(_COMMIT_ATTEMPTS):
+        try:
+            return attempt()
+        except retry_on as exc:
+            last = exc
+    raise retry_on(
+        f"{what} lost the commit race {_COMMIT_ATTEMPTS} times in "
+        f"{table_dir} (pathological contention): {last}") from last
+
+
 def _compute_op_metrics(parent: dict | None, manifest: dict) -> dict:
     """Delta-style ``operationMetrics``, derived at COMMIT time from
     metadata already in hand (the parent diff ``_make_delta`` performs
@@ -730,8 +746,7 @@ def _write_checkpoint(table_dir: str, state: dict) -> None:
     state dict in driver memory, and a real cluster could hand the
     same file to distributed Spark. Idempotent content (deterministic
     replay of the log), so last-writer-wins os.replace is safe under
-    racing writers. Pre-existing ``.ckpt`` JSON checkpoints stay
-    readable forever."""
+    racing writers."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     files = list(state["files"])
@@ -1112,13 +1127,10 @@ def _load_sidecar(path: str) -> dict:
 
 
 def _bloom_bits(entry: dict, table_dir: str | None) -> bytes | None:
-    """The filter's bytes: inline ``b64`` (legacy manifests) or lazily
-    resolved from the sidecar file the manifest references — loaded
-    only for files that already survived min/max stats pruning, and
-    never serialized into commit JSON."""
+    """The filter's bytes, lazily resolved from the sidecar file the
+    manifest references — loaded only for files that already survived
+    min/max stats pruning, and never serialized into commit JSON."""
     import base64
-    if "b64" in entry:
-        return base64.b64decode(entry["b64"])
     if entry.get("sc") and table_dir is not None:
         try:
             sc = _load_sidecar(os.path.join(table_dir, entry["sc"]))
@@ -1578,8 +1590,7 @@ def _read_files_renamed(spark: SparkSession, table_dir: str,
     return out
 
 
-def snapshot_rename_column(table_dir: str, old: str, new: str,
-                           max_retries: int = 5) -> int:
+def snapshot_rename_column(table_dir: str, old: str, new: str) -> int:
     """RENAME COLUMN as a METADATA-ONLY commit (Iceberg's column
     mapping / Delta's column-mapping mode): no data file is read or
     rewritten — the new manifest keeps the same file list, records the
@@ -1641,7 +1652,7 @@ def snapshot_rename_column(table_dir: str, old: str, new: str,
         # instead of storing every file's rewritten chain/stats keys
         out["__delta_ops__"] = {"op_rename": [old, new]}
         return out
-    return _metadata_commit(table_dir, "rename", mutate, max_retries)
+    return _metadata_commit(table_dir, "rename", mutate)
 
 
 #: legal metadata-only type widenings (Delta 3.x type widening /
@@ -1706,7 +1717,6 @@ def _is_partition_source(m: dict, col: str) -> bool:
 
 
 def snapshot_widen_column(table_dir: str, col: str, new_type: str,
-                          max_retries: int = 5,
                           rewrite: bool = False,
                           spark: SparkSession | None = None) -> int:
     """WIDEN a column's type as a METADATA-ONLY commit (Delta's type
@@ -1793,27 +1803,24 @@ def snapshot_widen_column(table_dir: str, col: str, new_type: str,
                     _parse_datatype_string(str(new_type))
                     .simpleString()):
                 # metadata-safe after all: never rewrite for free wins
-                return _metadata_commit(table_dir, "widen", mutate,
-                                        max_retries)
+                return _metadata_commit(table_dir, "widen", mutate)
         if spark is None:
             raise ValueError(
                 "snapshot_widen_column(rewrite=True) needs the "
                 "SparkSession to read and rewrite the table — pass "
                 "spark=")
-        return _widen_rewrite(spark, table_dir, col, str(new_type),
-                              max_retries)
-    return _metadata_commit(table_dir, "widen", mutate, max_retries)
+        return _widen_rewrite(spark, table_dir, col, str(new_type))
+    return _metadata_commit(table_dir, "widen", mutate)
 
 
 def _widen_rewrite(spark: SparkSession, table_dir: str, col: str,
-                   new_type: str, max_retries: int = 5) -> int:
+                   new_type: str) -> int:
     """The ``rewrite=True`` escape: read-latest -> CAST -> ONE
     overwrite commit, retried against the NEW latest on a lost
     publish race (each attempt re-reads, so an interleaved commit's
     rows are never dropped). Stats/bloom coverage recorded in the old
     manifest is re-established on the new files."""
-    last: FileExistsError | None = None
-    for _ in range(max_retries + 1):
+    def attempt():
         v = _latest_version(table_dir)
         if v is None:
             raise FileNotFoundError(
@@ -1829,26 +1836,25 @@ def _widen_rewrite(spark: SparkSession, table_dir: str, col: str,
                              .values() for c in b if c in names})
         sdf = _plain(snapshot_read(spark, table_dir, version=v)) \
             .withColumn(col, F.col(col).cast(new_type))
-        try:
-            return snapshot_write(sdf, table_dir, mode="overwrite",
-                                  stats_cols=stats_cols or None,
-                                  bloom_cols=bloom_cols or None)
-        except FileExistsError as exc:
-            last = exc
-    raise FileExistsError(
-        f"widen rewrite lost the publish race {max_retries + 1} "
-        f"times in {table_dir} (pathological contention): {last}")
+        return snapshot_write(sdf, table_dir, mode="overwrite",
+                              stats_cols=stats_cols or None,
+                              bloom_cols=bloom_cols or None)
+    return _retry_commit(attempt, "widen rewrite", table_dir)
 
 
-def _metadata_commit(table_dir: str, operation: str, mutate,
-                     max_retries: int = 5) -> int:
-    """Shared retry loop for metadata-only commits: *mutate* receives
-    the latest manifest and returns the child manifest's extra/changed
-    fields (schema, constraints, ...); files/stats/bloom/renames/txn
-    carry verbatim unless overridden. A lost race re-reads and
-    recomputes (metadata-only, trivially safe)."""
-    last: FileExistsError | None = None
-    for _ in range(max_retries + 1):
+#: manifest keys a metadata-only commit carries from its parent unless
+#: *mutate* overrides them (an empty override drops the key)
+_CARRY_KEYS = ("stats", "bloom", "renamed_files", "dv", "partitions",
+               "txn", "constraints", "generated", "cluster_by")
+
+
+def _metadata_commit(table_dir: str, operation: str, mutate) -> int:
+    """Shared metadata-only commit (schema changes, constraints, txn
+    watermarks, restore): *mutate* receives the latest manifest and
+    returns the child manifest's extra/changed fields; the
+    ``_CARRY_KEYS`` carry verbatim unless overridden. A lost race
+    re-reads and recomputes (metadata-only, trivially safe)."""
+    def attempt():
         base_v = _latest_version(table_dir)
         if base_v is None:
             raise FileNotFoundError(
@@ -1861,28 +1867,19 @@ def _metadata_commit(table_dir: str, operation: str, mutate,
             "schema": m["schema"],
             "files": m["files"],
         }
-        for key in ("stats", "bloom", "renamed_files", "dv",
-                    "partitions", "txn", "constraints", "generated",
-                    "cluster_by"):
+        for key in _CARRY_KEYS:
             if m.get(key):
                 manifest[key] = m[key]
         manifest.update(mutate(m))
-        for key in ("stats", "bloom", "renamed_files", "dv",
-                    "partitions", "constraints", "generated"):
+        for key in _CARRY_KEYS:
             if key in manifest and not manifest[key]:
                 del manifest[key]
-        try:
-            _publish(table_dir, manifest)
-            return base_v + 1
-        except FileExistsError as exc:
-            last = exc
-    raise FileExistsError(
-        f"{operation} lost the publish race {max_retries + 1} times "
-        f"in {table_dir}: {last}")
+        _publish(table_dir, manifest)
+        return base_v + 1
+    return _retry_commit(attempt, operation, table_dir)
 
 
-def snapshot_set_txn(table_dir: str, txn,
-                     txn_expect=None, max_retries: int = 5) -> int:
+def snapshot_set_txn(table_dir: str, txn, txn_expect=None) -> int:
     """Advance one or more idempotent-writer watermarks with a
     METADATA-ONLY commit — no data file is read or written (Delta's
     ``txnAppId``/``txnVersion`` carried by an otherwise-empty commit).
@@ -1902,12 +1899,11 @@ def snapshot_set_txn(table_dir: str, txn,
         for app, v in _txn_entries(txn):
             txns[app] = v
         return {"txn": txns}
-    return _metadata_commit(table_dir, "set_txn", mutate, max_retries)
+    return _metadata_commit(table_dir, "set_txn", mutate)
 
 
 def snapshot_add_constraint(table_dir: str, name: str,
-                            sql_predicate: str,
-                            max_retries: int = 5) -> int:
+                            sql_predicate: str) -> int:
     """ADD a CHECK constraint (Delta's ``ALTER TABLE ADD CONSTRAINT``)
     as a metadata-only commit: the SQL predicate is stored in the
     manifest (carried by every later commit) and ENFORCED by
@@ -1923,12 +1919,10 @@ def snapshot_add_constraint(table_dir: str, name: str,
             raise ValueError(f"constraint {name!r} already exists")
         cons[name] = sql_predicate
         return {"constraints": cons}
-    return _metadata_commit(table_dir, "add_constraint", mutate,
-                            max_retries)
+    return _metadata_commit(table_dir, "add_constraint", mutate)
 
 
-def snapshot_drop_constraint(table_dir: str, name: str,
-                             max_retries: int = 5) -> int:
+def snapshot_drop_constraint(table_dir: str, name: str) -> int:
     """DROP a CHECK constraint (metadata-only commit)."""
     def mutate(m):
         cons = dict(m.get("constraints") or {})
@@ -1940,9 +1934,7 @@ def snapshot_drop_constraint(table_dir: str, name: str,
         if not cons:
             out["constraints"] = {}
         return out
-    v = _metadata_commit(table_dir, "drop_constraint", mutate,
-                         max_retries)
-    return v
+    return _metadata_commit(table_dir, "drop_constraint", mutate)
 
 
 def _enforce_constraints(sdf: DataFrame, constraints: dict) -> None:
@@ -2136,8 +2128,7 @@ def _apply_generated(sdf: DataFrame, gen: dict
 
 
 def snapshot_add_generated_column(table_dir: str, name: str,
-                                  expr: str,
-                                  max_retries: int = 5) -> int:
+                                  expr: str) -> int:
     """Declare an EXPRESSION-generated column on an existing table as
     a metadata-only commit (Delta's ``GENERATED ALWAYS AS (expr)``):
     from the next write on, a batch that omits *name* gets it computed
@@ -2161,12 +2152,10 @@ def snapshot_add_generated_column(table_dir: str, name: str,
                 f"declaration")
         gen[name] = {"expr": str(expr)}
         return {"generated": gen}
-    return _metadata_commit(table_dir, "add_generated", mutate,
-                            max_retries)
+    return _metadata_commit(table_dir, "add_generated", mutate)
 
 
-def snapshot_drop_generated_column(table_dir: str, name: str,
-                                   max_retries: int = 5) -> int:
+def snapshot_drop_generated_column(table_dir: str, name: str) -> int:
     """Remove a generated/identity declaration (metadata-only; the
     column and its data stay — only the write-time rule goes)."""
     def mutate(m):
@@ -2177,8 +2166,7 @@ def snapshot_drop_generated_column(table_dir: str, name: str,
                 f"(has {sorted(gen)})")
         del gen[name]
         return {"generated": gen}
-    return _metadata_commit(table_dir, "drop_generated", mutate,
-                            max_retries)
+    return _metadata_commit(table_dir, "drop_generated", mutate)
 
 
 def snapshot_clone(src_table_dir: str, dst_table_dir: str,
@@ -2244,8 +2232,7 @@ def snapshot_clone(src_table_dir: str, dst_table_dir: str,
     return 1
 
 
-def snapshot_drop_column(table_dir: str, col: str,
-                         max_retries: int = 5) -> int:
+def snapshot_drop_column(table_dir: str, col: str) -> int:
     """DROP COLUMN as a METADATA-ONLY commit (the column-mapping twin
     of ``snapshot_rename_column``): no file is rewritten — the new
     manifest's schema loses the field, reads project it away, and each
@@ -2297,8 +2284,7 @@ def snapshot_drop_column(table_dir: str, col: str,
         out["bloom"] = bloom
         out["__delta_ops__"] = {"op_drop": [col, tomb]}
         return out
-    return _metadata_commit(table_dir, "drop_column", mutate,
-                            max_retries)
+    return _metadata_commit(table_dir, "drop_column", mutate)
 
 
 def _carry_renames(parent_manifest: dict | None,
@@ -3372,7 +3358,6 @@ def snapshot_write_retrying(frame, table_dir: str,
                             num_files: int | None = None,
                             stats_cols: Sequence[str] | None = None,
                             bloom_cols: Sequence[str] | None = None,
-                            max_retries: int = 5,
                             txn: tuple[str, int] | None = None) -> int:
     """``snapshot_write`` with the standard optimistic-concurrency
     retry loop: a writer that loses the atomic publish race re-reads
@@ -3382,21 +3367,13 @@ def snapshot_write_retrying(frame, table_dir: str,
     loser's orphaned data directory is reclaimed by ``vacuum``). For
     ``append`` the result is equivalent under any interleaving; an
     ``overwrite`` retry supersedes whatever the interleaved winner
-    wrote — the documented last-writer-wins overwrite semantics.
-    Raises after *max_retries* consecutive lost races (pathological
-    contention)."""
-    last: FileExistsError | None = None
-    for _ in range(max_retries):
-        try:
-            return snapshot_write(frame, table_dir, mode=mode,
-                                  num_files=num_files,
-                                  stats_cols=stats_cols,
-                                  bloom_cols=bloom_cols, txn=txn)
-        except FileExistsError as exc:
-            last = exc
-    raise FileExistsError(
-        f"lost the publish race {max_retries} times in {table_dir} "
-        f"(pathological contention): {last}")
+    wrote — the documented last-writer-wins overwrite semantics."""
+    return _retry_commit(
+        lambda: snapshot_write(frame, table_dir, mode=mode,
+                               num_files=num_files,
+                               stats_cols=stats_cols,
+                               bloom_cols=bloom_cols, txn=txn),
+        "write", table_dir)
 
 
 def _try_rebase_publish(table_dir: str, base_version: int,
@@ -3616,8 +3593,7 @@ def snapshot_optimize(spark: SparkSession, table_dir: str,
                       target_file_mb: int = 128,
                       zorder_by: Sequence[str] | None = None,
                       num_files: int | None = None,
-                      where=None,
-                      max_retries: int = 5) -> int:
+                      where=None) -> int:
     """OPTIMIZE the current version: bin-pack its (typically many
     small) files into ~*target_file_mb* files and publish the result
     as a new version with identical rows — the public Delta OPTIMIZE
@@ -3643,8 +3619,7 @@ def snapshot_optimize(spark: SparkSession, table_dir: str,
     commutes with ANY append — the rebased manifest carries the
     winner's new files uncompacted alongside our compacted rewrite.
     A winner that rewrote files (merge/overwrite/another optimize)
-    forces a recompute against the new state, up to *max_retries*
-    times.
+    forces a recompute against the new state.
 
     ``where`` (Delta's ``OPTIMIZE ... WHERE``): compact ONLY the files
     whose stats/bloom may hold matching rows — the hot-partition
@@ -3652,16 +3627,10 @@ def snapshot_optimize(spark: SparkSession, table_dir: str,
     99% of a 100 TB table is untouched metadata). Predicates use the
     same ``(col, op, value)`` triples as reads/DML; files outside the
     selection carry verbatim with their stats/blooms/chains."""
-    last: FileExistsError | None = None
-    for _ in range(max_retries + 1):
-        try:
-            return _optimize_once(spark, table_dir, target_file_mb,
-                                  zorder_by, num_files, where)
-        except FileExistsError as exc:
-            last = exc
-    raise FileExistsError(
-        f"optimize lost the publish race {max_retries + 1} times in "
-        f"{table_dir} (pathological contention): {last}")
+    return _retry_commit(
+        lambda: _optimize_once(spark, table_dir, target_file_mb,
+                               zorder_by, num_files, where),
+        "optimize", table_dir)
 
 
 def _optimize_once(spark: SparkSession, table_dir: str,
@@ -4861,8 +4830,7 @@ def snapshot_vacuum(table_dir: str, keep_last: int = 1,
     if not dry_run:
         for v in surviving:
             if v - 1 in survset \
-                    or os.path.exists(_ckpt_pq_path(table_dir, v)) \
-                    or os.path.exists(_ckpt_path(table_dir, v)):
+                    or os.path.exists(_ckpt_pq_path(table_dir, v)):
                 continue
             try:
                 with open(_manifest_path(table_dir, v)) as f:
@@ -4905,12 +4873,10 @@ def snapshot_vacuum(table_dir: str, keep_last: int = 1,
     for v in versions:
         if v not in surviving:
             os.remove(_manifest_path(table_dir, v))
-            for cp in (_ckpt_path(table_dir, v),
-                       _ckpt_pq_path(table_dir, v)):
-                try:
-                    os.remove(cp)
-                except FileNotFoundError:
-                    pass
+            try:
+                os.remove(_ckpt_pq_path(table_dir, v))
+            except FileNotFoundError:
+                pass
     _cache_drop_table(os.path.abspath(table_dir))
     return deleted
 
@@ -4937,8 +4903,7 @@ def snapshot_read_merged(spark: SparkSession, table_dir: str,
 
 def snapshot_merge(spark: SparkSession, table_dir: str, source,
                    on, update_cols=None, insert_unmatched: bool = True,
-                   num_files: int | None = None,
-                   max_retries: int = 5, dv: bool = True,
+                   num_files: int | None = None, dv: bool = True,
                    change_data: bool = True,
                    txn: tuple[str, int] | None = None,
                    txn_expect: int | None = None) -> int:
@@ -4965,7 +4930,7 @@ def snapshot_merge(spark: SparkSession, table_dir: str, source,
     matching keys (disjoint stats envelopes), the already-written
     result is REBASED onto the new latest — same data files, new
     manifest; on a true conflict the merge recomputes against the new
-    table state, up to *max_retries* times.
+    table state.
 
     ``txn=(app_id, txn_version)`` rides the merge commit itself (the
     same idempotent-writer watermark ``snapshot_write`` records —
@@ -4976,19 +4941,13 @@ def snapshot_merge(spark: SparkSession, table_dir: str, source,
     """
     keys = [on] if isinstance(on, str) else list(on)
     src = _plain(source)
-    last: FileExistsError | None = None
-    for _ in range(max_retries + 1):
-        try:
-            return _merge_once(spark, table_dir, src, keys, on,
-                               update_cols, insert_unmatched,
-                               num_files, use_dv=dv,
-                               change_data=change_data, txn=txn,
-                               txn_expect=txn_expect)
-        except FileExistsError as exc:
-            last = exc
-    raise FileExistsError(
-        f"merge lost the publish race {max_retries + 1} times in "
-        f"{table_dir} (pathological contention): {last}")
+    return _retry_commit(
+        lambda: _merge_once(spark, table_dir, src, keys, on,
+                            update_cols, insert_unmatched,
+                            num_files, use_dv=dv,
+                            change_data=change_data, txn=txn,
+                            txn_expect=txn_expect),
+        "merge", table_dir)
 
 
 def _merge_once(spark: SparkSession, table_dir: str, src, keys, on,
@@ -5191,52 +5150,21 @@ def snapshot_restore(table_dir: str, version: int) -> int:
         raise FileNotFoundError(
             f"cannot restore version {version}: {len(missing)} of its "
             f"files were vacuumed (first: {missing[0]})")
-    last: FileExistsError | None = None
-    for _ in range(6):
-        latest = _latest_version(table_dir)
-        lm = _read_manifest(table_dir, latest)
-        manifest = {
-            "version": latest + 1,
-            "parent": latest,
-            "operation": "restore",
-            "schema": m["schema"],
-            "files": m["files"],
-        }
-        if m.get("stats"):
-            manifest["stats"] = m["stats"]
-        if m.get("bloom"):
-            manifest["bloom"] = m["bloom"]
-        if m.get("renamed_files"):
-            manifest["renamed_files"] = m["renamed_files"]
-        if m.get("dv"):
-            manifest["dv"] = m["dv"]
-        if m.get("partitions"):
-            manifest["partitions"] = m["partitions"]
-        if m.get("constraints"):
-            manifest["constraints"] = m["constraints"]
-        if m.get("generated"):
-            manifest["generated"] = m["generated"]
-        if m.get("cluster_by"):
-            manifest["cluster_by"] = m["cluster_by"]
-        if lm.get("txn"):
-            manifest["txn"] = lm["txn"]  # idempotence watermarks are
-            # writer-progress, not data state: they survive a restore
-        try:
-            _publish(table_dir, manifest)
-            return latest + 1
-        except FileExistsError as exc:
-            last = exc          # metadata-only: retrying at the new
-            # latest is trivially safe (last-writer-wins, like
-            # overwrite) — a racing ingest must not abandon a restore
-    raise FileExistsError(
-        f"restore lost the publish race 6 times in {table_dir} "
-        f"(pathological contention): {last}")
+
+    def mutate(_latest):
+        # the old version's data state replaces the latest's; txn
+        # watermarks are writer progress, not data state, so they
+        # carry from the latest (a racing ingest must not abandon a
+        # restore — metadata-only, so retrying is trivially safe)
+        out = {k: m.get(k) for k in _CARRY_KEYS if k != "txn"}
+        out.update(schema=m["schema"], files=m["files"])
+        return out
+    return _metadata_commit(table_dir, "restore", mutate)
 
 
 def snapshot_delete(spark: SparkSession, table_dir: str, where,
                     dv: bool = True,
                     num_files: int | None = None,
-                    max_retries: int = 5,
                     change_data: bool = True,
                     txn: tuple[str, int] | None = None) -> int:
     """Row-level DELETE: remove every row matching *where* (a list of
@@ -5263,16 +5191,10 @@ def snapshot_delete(spark: SparkSession, table_dir: str, where,
     proportional to 1 row instead of rewriting the gigabyte.
     ``snapshot_optimize`` materializes vectors away; ``dv=False``
     forces the classic rewrite."""
-    last: FileExistsError | None = None
-    for _ in range(max_retries + 1):
-        try:
-            return _delete_once(spark, table_dir, where, num_files,
-                                dv, change_data, txn=txn)
-        except FileExistsError as exc:
-            last = exc
-    raise FileExistsError(
-        f"delete lost the publish race {max_retries + 1} times in "
-        f"{table_dir} (pathological contention): {last}")
+    return _retry_commit(
+        lambda: _delete_once(spark, table_dir, where, num_files, dv,
+                             change_data, txn=txn),
+        "delete", table_dir)
 
 
 def _delete_once(spark: SparkSession, table_dir: str, where,
@@ -5292,7 +5214,7 @@ def _delete_once(spark: SparkSession, table_dir: str, where,
 
 def snapshot_update(spark: SparkSession, table_dir: str, where,
                     set_exprs: dict, num_files: int | None = None,
-                    max_retries: int = 5, dv: bool = True,
+                    dv: bool = True,
                     change_data: bool = True,
                     txn: tuple[str, int] | None = None) -> int:
     """Row-level UPDATE ... SET: rewrite matching rows' columns to the
@@ -5308,8 +5230,6 @@ def snapshot_update(spark: SparkSession, table_dir: str, where,
     its matched positions take a deletion vector and the UPDATED rows
     append as a new file (Delta's DV update shape) — write bytes
     proportional to the matched rows, not the touched files."""
-    last: FileExistsError | None = None
-
     def rewrite(t_df, match_cond, schema, m):
         names = [f.name for f in schema.fields]
         bad = [c for c in set_exprs if c not in names]
@@ -5327,18 +5247,11 @@ def snapshot_update(spark: SparkSession, table_dir: str, where,
             _enforce_constraints(out, m["constraints"])
         return out
 
-    for _ in range(max_retries + 1):
-        try:
-            return _dml_rewrite_once(spark, table_dir, where,
-                                     num_files, "update", rewrite,
-                                     use_dv=dv,
-                                     change_data=change_data,
-                                     txn=txn)
-        except FileExistsError as exc:
-            last = exc
-    raise FileExistsError(
-        f"update lost the publish race {max_retries + 1} times in "
-        f"{table_dir} (pathological contention): {last}")
+    return _retry_commit(
+        lambda: _dml_rewrite_once(spark, table_dir, where, num_files,
+                                  "update", rewrite, use_dv=dv,
+                                  change_data=change_data, txn=txn),
+        "update", table_dir)
 
 
 #: DV eligibility: a touched file takes a deletion vector instead of a

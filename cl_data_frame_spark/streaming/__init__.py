@@ -323,32 +323,41 @@ def run_stream_to_memory(stream_df: DataFrame, query_name: str,
     # micro-batches overlap (guide §2.6), and an unguarded restore
     # could capture another starter's temporary value as "previous"
     # and leave the session conf pinned low for later batch queries
-    with _START_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        stream_parts = min(int(prev), 8) if str(prev).isdigit() else 8
-        spark.conf.set("spark.sql.shuffle.partitions", str(stream_parts))
+    q = None
+    try:
+        with _START_LOCK:
+            prev = spark.conf.get("spark.sql.shuffle.partitions")
+            stream_parts = (min(int(prev), 8) if str(prev).isdigit()
+                            else 8)
+            spark.conf.set("spark.sql.shuffle.partitions",
+                           str(stream_parts))
+            try:
+                q = (stream_df.writeStream.format("memory")
+                     .queryName(query_name)
+                     .option("checkpointLocation", ckpt)
+                     .outputMode(output_mode).start())
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q.processAllAvailable()
+        if min_rows is not None:
+            import time as _time
+            deadline = _time.time() + timeout
+            while (spark.table(query_name).count() < min_rows
+                   and _time.time() < deadline):
+                # short poll: the no-data micro-batch that emits
+                # watermark-gated rows usually lands within ~100ms of
+                # processAllAvailable; 0.5s polls added ~0.4s per
+                # waiting stream to the composite wall
+                _time.sleep(0.1)
+                q.processAllAvailable()
+    finally:
+        # the checkpoint dir usually sits on RAM-backed scratch: a
+        # failed start, micro-batch or stop must not leak it
         try:
-            q = (stream_df.writeStream.format("memory")
-                 .queryName(query_name)
-                 .option("checkpointLocation", ckpt)
-                 .outputMode(output_mode).start())
+            if q is not None:
+                q.stop()
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.processAllAvailable()
-    if min_rows is not None:
-        import time as _time
-        spark = stream_df.sparkSession
-        deadline = _time.time() + timeout
-        while (spark.table(query_name).count() < min_rows
-               and _time.time() < deadline):
-            # short poll: the no-data micro-batch that emits
-            # watermark-gated rows usually lands within ~100ms of
-            # processAllAvailable; 0.5s polls added ~0.4s per waiting
-            # stream to the composite wall
-            _time.sleep(0.1)
-            q.processAllAvailable()
-    q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def streaming_dedup(sdf: DataFrame, key_cols: list[str],
@@ -457,7 +466,6 @@ def snapshot_stream_sink(table_dir: str, app_id: str,
                          mode: str = "append",
                          stats_cols=None, bloom_cols=None,
                          num_files: int | None = None,
-                         max_retries: int = 5,
                          partition_by=None):
     """foreachBatch callable publishing each micro-batch as a snapshot
     table version EXACTLY ONCE — the union of the two subsystems: a
@@ -480,30 +488,23 @@ def snapshot_stream_sink(table_dir: str, app_id: str,
     the streaming-ingest layout story end to end.
     """
     from cl_data_frame_spark.sources.snapshots import (
-        snapshot_txn_version, snapshot_write)
+        _retry_commit, snapshot_txn_version, snapshot_write)
     if mode not in ("append", "complete"):
         raise ValueError(f"mode must be append/complete, got {mode!r}")
     write_mode = "append" if mode == "append" else "overwrite"
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        last = FileExistsError("unreached")
-        for _ in range(max_retries + 1):
+        def attempt():
             done = snapshot_txn_version(table_dir, app_id)
             if done is not None and int(batch_id) <= done:
                 return                       # replayed batch: landed
-            try:
-                snapshot_write(batch_df, table_dir, mode=write_mode,
-                               stats_cols=stats_cols,
-                               bloom_cols=bloom_cols,
-                               num_files=num_files,
-                               partition_by=partition_by,
-                               txn=(app_id, int(batch_id)))
-                return
-            except FileExistsError as exc:
-                last = exc                   # racer: re-check, retry
-        raise FileExistsError(
-            f"stream batch {batch_id} lost the publish race "
-            f"{max_retries + 1} times in {table_dir}: {last}")
+            snapshot_write(batch_df, table_dir, mode=write_mode,
+                           stats_cols=stats_cols,
+                           bloom_cols=bloom_cols,
+                           num_files=num_files,
+                           partition_by=partition_by,
+                           txn=(app_id, int(batch_id)))
+        _retry_commit(attempt, f"stream batch {batch_id}", table_dir)
 
     return _sink
 

@@ -11,13 +11,15 @@ from __future__ import annotations
 
 import importlib.util
 import sys
+from pathlib import Path
 
 
 def _load_entry():
     if "__spark_entry__" in sys.modules:
         return sys.modules["__spark_entry__"]
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py")
+        "__spark_entry__",
+        Path(__file__).resolve().parents[1] / "__spark_entry__.py")
     mod = importlib.util.module_from_spec(spec)
     sys.modules["__spark_entry__"] = mod
     spec.loader.exec_module(mod)

@@ -263,7 +263,8 @@ class TestMatviewConcurrentMaintainers:
         _assert_parity(spark, src, view, "post-race")
 
     def test_four_threaded_refreshers_converge_exactly(self, spark,
-                                                       tmp_path):
+                                                       tmp_path,
+                                                       monkeypatch):
         """Four concurrent maintainers racing over the same DML
         backlog: whatever interleaving the scheduler picks, the CAS
         serializes the refreshes and the view lands on the exact
@@ -284,11 +285,14 @@ class TestMatviewConcurrentMaintainers:
                         set_exprs={"val": "val + 1000.0"})
         errors: list = []
         barrier = threading.Barrier(4, timeout=120)
+        from cl_data_frame_spark.sources import snapshots as S
+        # four refreshers on one view: allow up to 20 lost races each
+        monkeypatch.setattr(S, "_COMMIT_ATTEMPTS", 21)
 
         def run():
             barrier.wait()
             try:
-                matview_refresh(spark, view, max_retries=20)
+                matview_refresh(spark, view)
             except Exception as exc:        # noqa: BLE001
                 errors.append(exc)
         threads = [threading.Thread(target=run) for _ in range(4)]

@@ -3194,41 +3194,6 @@ def test_materialized_changes_read_plan_is_scan_only(spark, tmp_path):
     assert fr.spark_df.count() >= 3
 
 
-def test_legacy_json_checkpoint_stays_readable(spark, tmp_path):
-    """Round 11: tables checkpointed by the pre-parquet code (single
-    JSON .ckpt blobs) reconstruct unchanged — the parquet reader falls
-    through to the JSON checkpoint, then to the delta chain."""
-    import json as _json
-
-    from cl_data_frame_spark.sources import snapshots as S
-    t = str(tmp_path / "tbl")
-    files = [f"data/v1/p{i}.parquet" for i in range(5)]
-    st = {"version": 1, "parent": None, "operation": "append",
-          "schema": '{"type":"struct","fields":[]}', "files": files,
-          "stats": {f: {"k": {"min": i, "max": i, "null_count": 0}}
-                    for i, f in enumerate(files)}}
-    S._publish(t, st)
-    st2 = {**st, "version": 2, "parent": 1,
-           "files": files + ["data/v2/p.parquet"],
-           "stats": {**st["stats"],
-                     "data/v2/p.parquet": {"k": {"min": 9, "max": 9,
-                                                 "null_count": 0}}}}
-    S._publish(t, st2)
-    # hand-write a LEGACY JSON checkpoint for v2 and drop the parquet
-    # one, as a pre-round-11 table would look on disk
-    pqp = S._ckpt_pq_path(t, 2)
-    if os.path.exists(pqp):
-        os.remove(pqp)
-    with open(S._ckpt_path(t, 2), "w") as f:
-        _json.dump(st2, f)
-    S._STATE_CACHE.clear()
-    m = S._read_manifest(t, 2)
-    assert len(m["files"]) == 6 and len(m["stats"]) == 6
-    # predicated listing: no parquet ckpt -> exact path, same answer
-    got = S.snapshot_scan_files(t, 2, where=[("k", "==", 3)])
-    assert got == [files[3]]
-
-
 def test_corrupt_parquet_checkpoint_falls_back(spark, tmp_path):
     """A truncated/garbage .ckpt.parquet must never wedge a read: the
     reconstruction falls through to the delta chain, and the streamed
@@ -4034,7 +3999,8 @@ class TestTxnGuardAndReset:
 
 class TestSnapshotConcurrencyStress:
     def test_eight_racing_writers_serialize_exactly(self, spark,
-                                                    tmp_path):
+                                                    tmp_path,
+                                                    monkeypatch):
         """Eight concurrent writers — appends, band deletes, and
         key-disjoint MERGEs, all through their retry/rebase loops —
         must serialize into a linear history with the exact final
@@ -4043,6 +4009,8 @@ class TestSnapshotConcurrencyStress:
         import threading
         from pyspark.sql import functions as F
         from cl_data_frame_spark.sources import snapshots as S
+        # eight writers on one table: allow up to 20 lost races each
+        monkeypatch.setattr(S, "_COMMIT_ATTEMPTS", 21)
         t = str(tmp_path / "stress")
         seed = spark.range(1000).select(
             F.col("id").alias("k"), F.lit(1.0).alias("v"))
@@ -4069,8 +4037,7 @@ class TestSnapshotConcurrencyStress:
                 try:
                     S.snapshot_delete(spark, t,
                                       [("k", ">=", lo),
-                                       ("k", "<", hi)],
-                                      max_retries=20)
+                                       ("k", "<", hi)])
                 except Exception as exc:     # noqa: BLE001
                     errors.append(exc)
             return run
@@ -4082,8 +4049,7 @@ class TestSnapshotConcurrencyStress:
                     src = spark.range(lo, lo + 50).select(
                         F.col("id").alias("k"),
                         F.lit(9.0).alias("v"))
-                    S.snapshot_merge(spark, t, src, on="k",
-                                     max_retries=20)
+                    S.snapshot_merge(spark, t, src, on="k")
                 except Exception as exc:     # noqa: BLE001
                     errors.append(exc)
             return run

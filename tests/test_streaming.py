@@ -197,6 +197,19 @@ def test_streaming_dedup_collapses_duplicate_deliveries(spark, tmp_path):
     assert sorted(r["event_id"] for r in rows) == [1, 2]
 
 
+def test_failed_stream_removes_its_checkpoint(spark, tmp_path,
+                                              monkeypatch):
+    """The verification checkpoint (RAM-backed scratch by default) is
+    removed even when the query fails before it runs."""
+    from pyspark.errors import IllegalArgumentException
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(IllegalArgumentException):
+        ST.run_stream_to_memory(stream, "t_bad_mode",
+                                output_mode="bogus")
+    assert not list(tmp_path.glob("cdf_ck_*"))
+
+
 def test_stream_stream_interval_join_matches_batch(spark, stream_dir):
     batch = _events_batch(spark)
 
